@@ -4,7 +4,7 @@
 
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: check test test-deep bench sync-check
+.PHONY: check test test-deep bench sync-check perfbench
 
 check:
 	python tools/check.py $(SF_DIR)
@@ -27,3 +27,12 @@ test-deep:
 
 bench:
 	python bench.py
+
+# One benchmark run (perfbench/README.md), e.g.
+# `make perfbench WORKLOAD=corpus_scan SEED=1 TRACE=1`.
+WORKLOAD ?= corpus_scan
+SEED ?= 1
+TRACE ?= 0
+
+perfbench:
+	python3 perfbench/run.py --workload $(WORKLOAD) --seed $(SEED) --seconds 1 --trace $(TRACE)

@@ -15,6 +15,10 @@ aggregation is partial/final HashAggregate with spill (the reference's
 
 from __future__ import annotations
 
+import operator
+import re
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -66,35 +70,39 @@ def word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wordcount_rdd",
     oracle=_ORACLE_WORDCOUNT,
     tags=("flagship", "text", "rdd"),
-    doc="Same query as RDD map/reduceByKey (BASELINE.json spark_approach), "
-        "converted back to a DataFrame for checking.",
+    doc="Same query as RDD mapPartitions/reduceByKey (BASELINE.json "
+        "spark_approach): one Counter per partition is the in-mapper "
+        "combiner, reduceByKey the final aggregation; converted back to "
+        "a DataFrame for checking.",
 )
 def word_count_rdd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RDD rendition: map → reduceByKey, the canonical Spark MapReduce.
+    """RDD rendition: in-mapper combining → reduceByKey.
 
-    reduceByKey performs map-side combining — the exact analog of the
-    reference's per-file partial aggregation (sendFileByFile.cpp:150-200)
-    before its MPI exchange (:256-268).
+    Each partition keeps one ``Counter`` — the in-mapper combiner, the
+    analog of the reference's per-file ``std::map<string,int>`` flushed
+    at end of file (sendFileByFile.cpp:150-200) before its MPI exchange
+    (:256-268). Python work is one regex and one ``Counter.update`` per
+    document; at most (distinct words × partitions) pairs reach the
+    shuffle, where ``reduceByKey`` performs the final aggregation.
+
+    Deleting ``[^a-z'\\s]`` from the lowered document and splitting on
+    whitespace yields the same tokens as splitting first and stripping
+    ``[^a-z']`` per token: ``re``'s ``\\s`` is exactly ``str.isspace``,
+    so no token boundary moves, and ``split()`` drops empty tokens.
     """
-    import re
-
     docs = load_table(spark, sf_dir, "documents").select("text")
-    strip = re.compile(r"[^a-z']")
+    drop = re.compile(r"[^a-z'\s]")
 
-    def tokens(row):
-        if row.text is None:  # NULL text: match split(NULL) semantics
-            return
-        for tok in row.text.lower().split():
-            w = strip.sub("", tok)
-            if w:
-                yield w
+    # Nested so cloudpickle ships it by value: executors need not import
+    # this package.
+    def count_partition(rows):
+        counts = Counter()
+        for row in rows:
+            if row.text is not None:  # NULL text: match split(NULL) semantics
+                counts.update(drop.sub("", row.text.lower()).split())
+        return iter(counts.items())
 
-    counts = (
-        docs.rdd.flatMap(tokens)
-        .map(lambda w: (w, 1))
-        .reduceByKey(lambda a, b: a + b)
-        .map(lambda kv: (kv[0], kv[1]))
-    )
+    counts = docs.rdd.mapPartitions(count_partition).reduceByKey(operator.add)
     return spark.createDataFrame(counts, WORD_COUNT_SCHEMA)
 
 

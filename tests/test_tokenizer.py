@@ -10,9 +10,11 @@ char behavior (sendFileByFile.cpp:89-93, verified by simulation:
 from __future__ import annotations
 
 import re
+from collections import Counter
+from unittest import mock
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -21,6 +23,7 @@ from mapreducewordcounting_spark.functions.text import (
     tokenize_canonical,
     tokenize_fidelity,
 )
+from mapreducewordcounting_spark.operators import wordcount
 
 GOLDEN = [
     # (input token, canonical, fidelity)  — FIXTURES.md golden table
@@ -95,3 +98,69 @@ def test_counts_are_partition_invariant(spark_hyp, text):
 def spark_hyp(spark):
     """Alias fixture so hypothesis doesn't see a function-scoped spark."""
     return spark
+
+
+# --- wordcount_rdd's per-document combiner (no Spark) ----------------------
+
+_STRIP = re.compile(r"[^a-z']")
+
+
+def _tokens_per_token(text):
+    """Reference implementation: the per-token generator wordcount_rdd
+    used before in-mapper combining (split, then strip each token)."""
+    if text is None:
+        return
+    for tok in text.lower().split():
+        w = _STRIP.sub("", tok)
+        if w:
+            yield w
+
+
+class _Capture:
+    """Stands in for the session, the documents DataFrame and its RDD so
+    the partition function word_count_rdd builds can be called directly."""
+
+    rdd = property(lambda self: self)
+
+    def select(self, *_):
+        return self
+
+    def mapPartitions(self, fn):
+        self.fn = fn
+        return self
+
+    def reduceByKey(self, _):
+        return self
+
+    def createDataFrame(self, *_):
+        return self
+
+
+def _count_partition():
+    cap = _Capture()
+    with mock.patch.object(wordcount, "load_table", lambda *_: cap):
+        wordcount.word_count_rdd(cap, "")
+    return cap.fn
+
+
+# Whitespace outside ASCII (U+0085, U+00A0, U+1680, U+2028, U+3000 and the
+# \x1c-\x1f separators), case mappings that change length or context
+# (dotted capital I, final sigma) and the Kelvin sign, which lowers to "k".
+_SPECIAL = ("\x85", "\xa0", "\u1680", "\u2028", "\u3000", "\x1c", "\x1d",
+            "\x1e", "\x1f", "\u0130", "\u03a3", "\u212a")
+_char = (st.sampled_from(_SPECIAL + tuple("aZ' \t-"))
+         | st.characters(exclude_categories=()))  # every code point
+_doc = st.none() | st.text(alphabet=_char, max_size=40)
+
+
+@settings(max_examples=300, deadline=None)
+@example(["\u0130STANBUL \u039f\u0394\u039f\u03a3 \u03a3\u03a3 \u212aelvin "
+          "a\x85b\xa0c\u1680d\u2028e\u3000f\x1cg\x1dh\x1ei\x1fj",
+          None, "", " \t ", "..!", "Don't O'BRIEN"])
+@given(st.lists(_doc, max_size=8))
+def test_partition_counter_matches_per_token_generator(docs):
+    """One regex + one Counter.update per document gives the same counts
+    as stripping every token separately, over the whole of Unicode."""
+    got = dict(_count_partition()(Row(text=t) for t in docs))
+    want = Counter(w for t in docs for w in _tokens_per_token(t))
+    assert got == want
