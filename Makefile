@@ -4,7 +4,7 @@
 
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: check test test-deep bench sync-check perfbench
+.PHONY: check test test-deep bench sync-check perfbench plan-diff
 
 check:
 	python tools/check.py $(SF_DIR)
@@ -14,6 +14,11 @@ check:
 # agree with the live registry. Also the final stage of `make check`.
 sync-check:
 	python tools/sync_check.py
+
+# Plan-shape check for refactors: regenerate the registry-wide plan
+# audit (~4 min) and fail if any query's physical-plan facts moved.
+plan-diff:
+	python tools/plan_audit.py && git diff --exit-code PLANS_audit.json
 
 # Default tier (pytest.ini deselects the `deep` hardening tier so
 # the driver's budget-bound run completes; VERDICT r13 item 2).

@@ -8,25 +8,29 @@ dropped, so an operator must never unpersist a checkpoint its returned
 DataFrame still reads. That splits the repo's checkpoint sites into
 two classes:
 
-* **loop-superseded** (pagerank's per-iteration ranks, dedup_clusters'
-  per-iteration labels): iteration k's checkpoint is consumed exactly
-  once — to materialize iteration k+1's checkpoint — and is garbage
-  the moment that successor exists. Without an explicit unpersist, a
-  10-iteration pagerank leaves 10 pinned rank snapshots per call in a
-  long-lived session (bench's 4x invocation, verify_full's registry-wide
-  sweep). :class:`CheckpointRotator` unpersists each superseded step
-  as soon as its successor is eagerly materialized, and
-  :meth:`CheckpointRotator.release` drops loop-scoped scratch (the
-  pagerank edge table, the clusters edge list) that the returned plan
-  no longer references.
 * **result-referenced** (the one-shot shingle/tf/weights tables in
-  dedup.py, text_analysis.py, drift.py, similarity.py): the RETURNED
-  DataFrame's plan is a scan of those blocks, so the operator cannot
-  release them. Their bound is one checkpoint per operator CALL,
-  freed by Spark's ContextCleaner when the DataFrame is GC'd — and
-  deterministically by :func:`release_all_pinned`, which the bench
-  and verify_full harnesses call between queries (safe there because
-  every query call builds its DataFrames fresh).
+  dedup.py, text_analysis.py, drift.py; the ANN index tables in
+  similarity.py): a plain ``df.localCheckpoint(eager=True)``. The
+  RETURNED DataFrame's plan is a scan of those blocks, so the
+  operator cannot release them. Their bound is one checkpoint per
+  operator CALL, freed by Spark's ContextCleaner when the DataFrame
+  is GC'd — and deterministically by :func:`release_all_pinned`,
+  which the bench and verify_full harnesses call between queries
+  (safe there because every query call builds its DataFrames fresh).
+* **loop-superseded** (pagerank's per-iteration ranks, the BFS
+  distances, the label-propagation and component-label sweeps):
+  iteration k's checkpoint is consumed exactly once — to materialize
+  iteration k+1's checkpoint — and is garbage the moment that
+  successor exists. Without an explicit unpersist, a 10-iteration
+  pagerank leaves 10 pinned rank snapshots per call in a long-lived
+  session (bench's 4x invocation, verify_full's registry-wide sweep).
+  :class:`CheckpointRotator` exists only for these loops: it
+  unpersists each superseded step as soon as its successor is eagerly
+  materialized, and :meth:`CheckpointRotator.release` drops
+  loop-scoped scratch (the pagerank edge table, the component edge
+  list) that the returned plan no longer references. The final
+  snapshot stays pinned for the returned plan, like a
+  result-referenced checkpoint.
 
 Id-diffing note: created-RDD ids are discovered by diffing
 ``getPersistentRDDs`` around the checkpoint call, which assumes no
@@ -113,12 +117,6 @@ class CheckpointRotator:
             rdd.unpersist(False)
         self._live = created
         return out
-
-    def keep(self) -> None:
-        """Detach from the current checkpoint WITHOUT unpersisting it
-        (the returned plan reads it; ContextCleaner / the harness
-        sweep frees it after the caller lets go)."""
-        self._live = {}
 
     def release(self) -> None:
         for rdd in self._live.values():

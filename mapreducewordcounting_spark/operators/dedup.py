@@ -21,6 +21,7 @@ non-vacuous.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -678,18 +679,8 @@ def dedup_clusters_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "source",
         (F.col("doc_id") / DEDUP_SHARD_SPAN).cast("bigint")
         .alias("shard"))
-    before_ids = pinned_ids(spark)
-    pairs = ngram_jaccard_pairs(
-        docs, 0.8, shard_cols=("source", "shard")
-    ).select("id_a", "id_b")
-    edges = pairs.unionByName(
-        pairs.select(F.col("id_b").alias("id_a"),
-                     F.col("id_a").alias("id_b")))
-    scratch = CheckpointRotator(spark)
-    edges = scratch.rotate(edges)
-    release_created_since(spark, before_ids, keep=scratch.live_ids)
-    labels = component_labels(edges)
-    scratch.release()
+    labels = component_labels(spark, lambda: ngram_jaccard_pairs(
+        docs, 0.8, shard_cols=("source", "shard")))
     shard_of = docs.select(F.col("doc_id").alias("node"),
                            "source", "shard")
     return (labels.join(shard_of, "node")
@@ -745,16 +736,8 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop — semantic near-dup graphs are sparser than lexical ones
     (planted fixture: cos 0.45 keeps component count > 1, sizes
     small), so the loop converges in a handful of sweeps."""
-    before_ids = pinned_ids(spark)
-    pairs = dedup_embedding_cosine(spark, sf_dir).select("id_a", "id_b")
-    edges = pairs.unionByName(
-        pairs.select(F.col("id_b").alias("id_a"),
-                     F.col("id_a").alias("id_b")))
-    scratch = CheckpointRotator(spark)
-    edges = scratch.rotate(edges)
-    release_created_since(spark, before_ids, keep=scratch.live_ids)
-    labels = component_labels(edges)
-    scratch.release()
+    labels = component_labels(
+        spark, lambda: dedup_embedding_cosine(spark, sf_dir))
     return labels.groupBy(F.col("label").alias("cluster_survivor")).agg(
         F.count("*").alias("n_members"),
         F.array_join(F.sort_array(F.collect_list("node")), "|")
@@ -765,35 +748,26 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def neardup_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(node, label)`` connected-component labels over the 3-gram
     Jaccard ≥ 0.8 near-dup pair graph — the shared front half of
-    dedup_clusters and training_ops.sample_split_leakage_safe.
+    dedup_clusters and training_ops.sample_split_leakage_safe."""
+    return component_labels(spark, lambda: dedup_ngram_jaccard(spark, sf_dir))
+
+
+def component_labels(spark: SparkSession,
+                     build_pairs: Callable[[], DataFrame]) -> DataFrame:
+    """Connected-component labels ``(node, label)`` — label = component
+    minimum id — by iterative min-label propagation over the undirected
+    graph of the ``(id_a, id_b)`` pairs that ``build_pairs()`` returns
+    (one direction suffices; extra columns are ignored).
 
     Checkpoint hygiene (VERDICT r5 item 5): the symmetric edge list is
     lineage-cut before iterating — without this, every iteration's
-    labels plan re-embeds the whole jaccard DAG and the loop goes
-    exponential (measured 24.7 s → ~5 s at sf0.1). The jaccard
-    sub-plan's own shingle checkpoint is freed as soon as the edge
-    list is materialized, and the edge list itself is dropped before
+    labels plan re-embeds the whole pair DAG and the loop goes
+    exponential (measured 24.7 s → ~5 s at sf0.1 for dedup_clusters).
+    ``build_pairs`` runs after a snapshot of the pinned RDDs, so every
+    checkpoint the pair sub-plan creates is freed as soon as the edge
+    list is materialized; the edge list itself is dropped before
     return — only the final label snapshot (which the returned plan
-    scans) stays pinned."""
-    before_ids = pinned_ids(spark)
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
-    edges = pairs.unionByName(
-        pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")))
-    scratch = CheckpointRotator(spark)
-    edges = scratch.rotate(edges)
-    release_created_since(spark, before_ids, keep=scratch.live_ids)
-    labels = component_labels(edges)
-    scratch.release()  # edge list: not read by the returned plan
-    return labels
-
-
-def component_labels(edges: DataFrame) -> DataFrame:
-    """Connected-component labels ``(node, label)`` — label = component
-    minimum id — by iterative min-label propagation over a SYMMETRIC
-    ``(id_a, id_b)`` edge list (callers union both directions and
-    should lineage-cut the edge list first; this function only rotates
-    its own per-iteration snapshots and leaves the FINAL one pinned for
-    the returned plan — harness sweeps free it later).
+    scans) stays pinned, for harness sweeps to free later.
 
     Iterates to convergence (bounded at 20): components merge along
     minimum labels, and a fixed small iteration count would silently
@@ -802,7 +776,14 @@ def component_labels(edges: DataFrame) -> DataFrame:
     convergence check is a filter over the already-materialized step
     output, not another join against the previous labels (which cost
     one extra shuffle per iteration)."""
-    steps = CheckpointRotator(edges.sparkSession)
+    before_ids = pinned_ids(spark)
+    pairs = build_pairs().select("id_a", "id_b")
+    scratch = CheckpointRotator(spark)
+    edges = scratch.rotate(pairs.unionByName(
+        pairs.select(F.col("id_b").alias("id_a"),
+                     F.col("id_a").alias("id_b"))))
+    release_created_since(spark, before_ids, keep=scratch.live_ids)
+    steps = CheckpointRotator(spark)
     # start: every node labels itself
     labels = steps.rotate(
         edges.select(F.col("id_a").alias("node"))
@@ -836,7 +817,7 @@ def component_labels(edges: DataFrame) -> DataFrame:
         raise RuntimeError(
             "component_labels did not converge in 20 sweeps; "
             f"{changed} labels still changing")
-    steps.keep()  # final label snapshot: read by the returned plan
+    scratch.release()  # edge list: not read by the returned plan
     return labels
 
 
@@ -1459,9 +1440,7 @@ def dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch re-runs the batch scan + probe (plan showed the subtree
     # duplicated). Hash-grain rows are 32-byte keys + counters —
     # exactly the scale of state a real gate materializes per tick.
-    scratch = CheckpointRotator(spark)
-    probed = scratch.rotate(probed)
-    scratch.keep()  # final plan reads both branches of it
+    probed = probed.localCheckpoint(eager=True)
     suspects = (
         probed.filter(F.col("n_hit") == _IBLOOM_K)
         .join(corpus.withColumn("in_corpus", F.lit(True)), "h", "left")

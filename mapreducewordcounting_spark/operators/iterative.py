@@ -159,7 +159,6 @@ def pagerank(edges: DataFrame, nodes: DataFrame,
                      * F.coalesce(F.col("inflow"), F.lit(0.0)))
                     .alias("rank")))
     scratch.release()  # the returned plan reads only the final snapshot
-    steps.keep()       # ...which must stay pinned for the caller
     return ranks
 
 
@@ -259,6 +258,18 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(c.c_nationkey.alias("src"), s.s_nationkey.alias("dst"))
         .agg(F.count("*").cast("double").alias("weight"))
     )
+
+
+def major_lanes(spark: SparkSession, sf_dir: str, mult: float) -> DataFrame:
+    """The "major trade lane" subgraph ``(src, dst)``: the trade_edges
+    whose weight is at least ``mult`` times the mean edge weight. The
+    mean is an exact-integer sum (Σ bigint counts < 2^53), so the
+    threshold is bit-identical in any partition order on both engines."""
+    w_all = Window.partitionBy()  # |nations|² rows max — tiny
+    return (trade_edges(spark, sf_dir)
+            .withColumn("thr", F.avg("weight").over(w_all) * mult)
+            .filter(F.col("weight") >= F.col("thr"))
+            .select("src", "dst"))
 
 
 #: DuckDB twin of trade_edges (distinct edges only — weights unused)
@@ -405,19 +416,11 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: hop-bounded BFS over a billion-edge graph is
     |hops| shuffles of the frontier against the hash-partitioned edge
     list; the edge build (the only fact-sized stage) is the same star
-    join PageRank uses. The mean threshold is an exact-integer sum
-    (Σ bigint counts < 2^53), so the double mean is bit-identical in
-    any partition order on both engines."""
-    edges = trade_edges(spark, sf_dir)  # (src, dst, weight=count)
-    w_all = Window.partitionBy()  # |nations|² rows max — tiny
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select("src", "dst"))
+    join PageRank uses."""
     nation = load_table(spark, sf_dir, "nation")
     sources = nation.filter(F.col("n_nationkey") == 0).select(
         F.col("n_nationkey").alias("node"))
-    return bfs_min_hops(e, sources)
+    return bfs_min_hops(major_lanes(spark, sf_dir, BFS_EDGE_MULT), sources)
 
 
 def bfs_min_hops(edges: DataFrame, sources: DataFrame,
@@ -445,7 +448,6 @@ def bfs_min_hops(edges: DataFrame, sources: DataFrame,
             dist.unionByName(step)
             .groupBy("node").agg(F.min("hops").alias("hops")))
     scratch.release()  # returned plan reads only the final snapshot
-    steps.keep()       # ...which must stay pinned for the caller
     return dist
 
 
@@ -506,21 +508,15 @@ def sql_recursive_cte_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is graph_bfs_hops' verbatim recursive CTE (DuckDB's
     set-semantics UNION bounds the walk there) — one oracle text, two
     independent Spark formulations."""
-    edges = trade_edges(spark, sf_dir)  # (src, dst, weight=count)
-    w_all = Window.partitionBy()  # |nations|² rows max — tiny
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select(F.col("src").cast("bigint").alias("src"),
-                 F.col("dst").cast("bigint").alias("dst")))
     # Materialize the edge list BEFORE the recursion: UnionLoop
     # re-executes the recursive step's full sub-plan every iteration,
     # so an un-cut lineage would re-run the fact-scale star join once
     # per hop (measured 6.9 s -> ~1 s at sf0.1). Kept pinned — the
     # returned plan reads it in every loop step.
-    steps = CheckpointRotator(spark)
-    e = steps.rotate(e)
-    steps.keep()
+    e = (major_lanes(spark, sf_dir, BFS_EDGE_MULT)
+         .select(F.col("src").cast("bigint").alias("src"),
+                 F.col("dst").cast("bigint").alias("dst"))
+         .localCheckpoint(eager=True))
     e.createOrReplaceTempView("rcte_bfs_edges")
     return spark.sql(f"""
         WITH RECURSIVE r(node, hops, path) AS (
@@ -760,10 +756,11 @@ def graph_wcc_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     giant component plus isolated nations at every SF), symmetrized,
     labeled by dedup's component_labels (the SAME min-label
     machinery that clusters near-duplicate documents — one
-    implementation, three consumers: dedup_clusters,
-    dedup_semantic_clusters, and this graph view), singletons
-    restored from the nation dim so components partition ALL nations.
-    Output: (component = min nation id, n_nodes).
+    implementation, four consumers: dedup_clusters,
+    dedup_clusters_sharded, dedup_semantic_clusters, and this graph
+    view), singletons restored from the nation dim so components
+    partition ALL nations. Output: (component = min nation id,
+    n_nodes).
 
     Scale: the edge build is the PageRank/BFS star join; label
     propagation is one groupBy exchange per sweep over the
@@ -776,19 +773,10 @@ def graph_wcc_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         component_labels,
     )
 
-    edges = trade_edges(spark, sf_dir)  # (src, dst, weight=count)
-    w_all = Window.partitionBy()  # |nations|² rows max — tiny
-    d = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * WCC_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select(F.col("src").cast("bigint").alias("id_a"),
-                 F.col("dst").cast("bigint").alias("id_b")))
-    sym = d.unionByName(d.select(F.col("id_b").alias("id_a"),
-                                 F.col("id_a").alias("id_b")))
-    scratch = CheckpointRotator(spark)
-    sym = scratch.rotate(sym)  # lineage-cut: the loop re-reads it
-    labels = component_labels(sym)  # (node, label)
-    scratch.release()
+    labels = component_labels(spark, lambda: (
+        major_lanes(spark, sf_dir, WCC_EDGE_MULT)
+        .select(F.col("src").cast("bigint").alias("id_a"),
+                F.col("dst").cast("bigint").alias("id_b"))))
     nations = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("node"))
     full = (nations.join(labels, "node", "left")
@@ -905,13 +893,7 @@ def graph_jaccard_link_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dimension-sized edge list. Jaccard = exact BIGINT counts in
     one double division (identical operands on both engines), and the
     rank key (score DESC, a, b) is total so ties are deterministic."""
-    edges = trade_edges(spark, sf_dir)
-    w_all = Window.partitionBy()
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select("src", "dst"))
-    scored = jaccard_link_scores(e)
+    scored = jaccard_link_scores(major_lanes(spark, sf_dir, BFS_EDGE_MULT))
     w_rank = Window.orderBy(F.desc("jaccard"), F.asc("a"), F.asc("b"))
     return (scored.withColumn("rnk", F.row_number().over(w_rank))
             .filter(F.col("rnk") <= LINKPRED_TOP_K)
@@ -978,12 +960,7 @@ def graph_degree_assortativity(spark: SparkSession,
     edge-end join, and the 6-number fold all run on the
     dimension-sized edge list (both orientations included, the
     standard undirected convention)."""
-    edges = trade_edges(spark, sf_dir)
-    w_all = Window.partitionBy()
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select("src", "dst"))
+    e = major_lanes(spark, sf_dir, BFS_EDGE_MULT)
     und = (e.filter(F.col("src") != F.col("dst"))
            .select(F.least("src", "dst").alias("u"),
                    F.greatest("src", "dst").alias("v"))
@@ -1061,6 +1038,42 @@ def _lpa_oracle_sql(iters: int = LPA_ITERS) -> str:
         GROUP BY label""")
 
 
+def label_propagation(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Synchronous label propagation over a directed edge list
+    ``(src, dst)`` read as an undirected simple graph (self-loops
+    dropped, mirror edges collapsed): every node starts as its own
+    label and, for LPA_ITERS sweeps, adopts the most frequent label
+    among its neighbors, ties to the smallest label (mode =
+    max(struct(n, -label)) — exact integers, no RNG). Returns
+    ``(adj, labels)``: the checkpointed symmetric adjacency ``(u, v)``
+    and the final ``(node, label)`` snapshot, both pinned for the
+    returned plans. Each sweep is one join + mode aggregate, rotated
+    so superseded snapshots unpersist. The structure-free differential
+    (tests/test_hypothesis_graph.py) drives this on random graphs
+    against a plain-Python sweep."""
+    und = (edges.filter(F.col("src") != F.col("dst"))
+           .select(F.least("src", "dst").alias("u"),
+                   F.greatest("src", "dst").alias("v"))
+           .distinct())
+    adj = (und.union(und.select(F.col("v").alias("u"),
+                                F.col("u").alias("v")))
+           .localCheckpoint())  # reused every sweep
+    labels = adj.select("u").distinct().select(
+        F.col("u").alias("node"), F.col("u").alias("label"))
+    rot = CheckpointRotator(edges.sparkSession)
+    for _ in range(LPA_ITERS):
+        counted = (adj.join(labels, adj.v == labels.node)
+                   .groupBy(F.col("u").alias("n2"), "label")
+                   .agg(F.count("*").alias("n")))
+        labels = rot.rotate(
+            counted.groupBy(F.col("n2").alias("node"))
+            .agg(F.max(F.struct(F.col("n"),
+                                (-F.col("label")).alias("neg")))
+                 .alias("m"))
+            .select("node", (-F.col("m.neg")).alias("label")))
+    return adj, labels
+
+
 @register(
     "graph_label_propagation",
     oracle=_lpa_oracle_sql(),
@@ -1084,33 +1097,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(struct(n, -label)) — exact integers, no RNG); at a
     billion-edge graph each sweep is the canonical pre-partitioned
     join, the BFS/pagerank budget."""
-    edges = trade_edges(spark, sf_dir)
-    w_all = Window.partitionBy()
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select("src", "dst"))
-    und = (e.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("u"),
-                   F.greatest("src", "dst").alias("v"))
-           .distinct())
-    adj = (und.union(und.select(F.col("v").alias("u"),
-                                F.col("u").alias("v")))
-           .localCheckpoint())  # reused every sweep
-    labels = adj.select("u").distinct().select(
-        F.col("u").alias("node"), F.col("u").alias("label"))
-    rot = CheckpointRotator(spark)
-    for _ in range(LPA_ITERS):
-        counted = (adj.join(labels, adj.v == labels.node)
-                   .groupBy(F.col("u").alias("n2"), "label")
-                   .agg(F.count("*").alias("n")))
-        labels = rot.rotate(
-            counted.groupBy(F.col("n2").alias("node"))
-            .agg(F.max(F.struct(F.col("n"),
-                                (-F.col("label")).alias("neg")))
-                 .alias("m"))
-            .select("node", (-F.col("m.neg")).alias("label")))
-    rot.keep()
+    _, labels = label_propagation(major_lanes(spark, sf_dir, BFS_EDGE_MULT))
     return (labels.groupBy("label")
             .agg(F.count("*").alias("n_members"),
                  F.min("node").cast("bigint").alias("min_member"))
@@ -1170,33 +1157,8 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions are the only doubles, rounded at 6. Spark side re-runs
     the LPA loop (dimension-sized) and adds two joins + one fold —
     all on the |nodes| grain."""
-    edges = trade_edges(spark, sf_dir)
-    w_all = Window.partitionBy()
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select("src", "dst"))
-    und = (e.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("u"),
-                   F.greatest("src", "dst").alias("v"))
-           .distinct())
-    adj = (und.union(und.select(F.col("v").alias("u"),
-                                F.col("u").alias("v")))
-           .localCheckpoint())
-    labels = adj.select("u").distinct().select(
-        F.col("u").alias("node"), F.col("u").alias("label"))
-    rot = CheckpointRotator(spark)
-    for _ in range(LPA_ITERS):
-        counted = (adj.join(labels, adj.v == labels.node)
-                   .groupBy(F.col("u").alias("n2"), "label")
-                   .agg(F.count("*").alias("n")))
-        labels = rot.rotate(
-            counted.groupBy(F.col("n2").alias("node"))
-            .agg(F.max(F.struct(F.col("n"),
-                                (-F.col("label")).alias("neg")))
-                 .alias("m"))
-            .select("node", (-F.col("m.neg")).alias("label")))
-    rot.keep()
+    adj, labels = label_propagation(
+        major_lanes(spark, sf_dir, BFS_EDGE_MULT))
     deg = adj.groupBy("u").agg(F.count("*").alias("deg"))
     la = labels.select(F.col("node").alias("u"),
                        F.col("label").alias("lab_a"))

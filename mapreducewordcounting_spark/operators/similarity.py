@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducewordcounting_spark.catalog import load_table
-from mapreducewordcounting_spark.checkpoints import CheckpointRotator
 from mapreducewordcounting_spark.functions.vectors import (
     cosine_similarity,
     dot,
@@ -542,6 +541,23 @@ def similarity_ann_recall_report(spark: SparkSession, sf_dir: str
 _AG_DEGREE = 3
 
 
+def _knn_edges(anchors: DataFrame, degree: int) -> DataFrame:
+    """Anchor k-NN adjacency ``(a_id, b_id)``: each anchor links to its
+    ``degree`` nearest other anchors by cosine, ties to the smaller
+    b_id (the oracles' ``ORDER BY cos DESC, b_id``). Anchors x anchors
+    is dimension-sized work over one broadcast side."""
+    ay = anchors.select(F.col("a_id").alias("b_id"),
+                        F.col("a_emb").alias("b_emb"))
+    w_e = Window.partitionBy("a_id").orderBy(F.desc("a_cos"), F.asc("b_id"))
+    return (anchors.crossJoin(F.broadcast(ay))
+            .filter(F.col("a_id") != F.col("b_id"))
+            .select("a_id", "b_id",
+                    cosine_similarity("a_emb", "b_emb").alias("a_cos"))
+            .withColumn("rnk", F.row_number().over(w_e))
+            .filter(F.col("rnk") <= degree)
+            .select("a_id", "b_id"))
+
+
 @register(
     "similarity_ann_anchor_graph",
     oracle=f"""
@@ -633,31 +649,14 @@ def similarity_ann_anchor_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once via local checkpoints (what a real ANN index
     # build does); without them each downstream branch re-ran the
     # full embeddings scan and the plan carried EIGHT table scans.
-    scratch = CheckpointRotator(spark)
-    anchors = scratch.rotate(_ann_anchors(emb))
-    scratch.keep()
-
-    # anchor k-NN adjacency (anchors x anchors — dimension-sized)
-    ax = anchors
-    ay = (anchors.select(F.col("a_id").alias("b_id"),
-                         F.col("a_emb").alias("b_emb")))
-    w_e = Window.partitionBy("a_id").orderBy(F.desc("a_cos"), F.asc("b_id"))
-    a_edges = (
-        ax.crossJoin(F.broadcast(ay))
-        .filter(F.col("a_id") != F.col("b_id"))
-        .select("a_id", "b_id",
-                cosine_similarity("a_emb", "b_emb").alias("a_cos"))
-        .withColumn("rnk", F.row_number().over(w_e))
-        .filter(F.col("rnk") <= _AG_DEGREE)
-        .select("a_id", "b_id"))
+    anchors = _ann_anchors(emb).localCheckpoint(eager=True)
+    a_edges = _knn_edges(anchors, _AG_DEGREE)
 
     # nearest-anchor assignment: map-side HOF argmax — zero exchanges
     assigned = _anchor_argmax_assign(emb, anchors).select(
         F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"), "a_id")
-    index = CheckpointRotator(spark)
-    assigned = index.rotate(assigned)
-    index.keep()  # q_route and the cell probe both read it
+        F.col("embedding").alias("c_emb"), "a_id"
+    ).localCheckpoint(eager=True)  # q_route and the cell probe both read it
 
     q_route = (assigned.filter(F.col("neighbor_id") < N_QUERIES)
                .select(F.col("neighbor_id").alias("query_id"),
@@ -857,9 +856,7 @@ def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str,
     state is |queries| x beam rows; the only fact-scale work is the
     one-time assignment scan and the final cell-keyed probe join."""
     emb = load_table(spark, sf_dir, "embeddings")
-    scratch = CheckpointRotator(spark)
-    anchors = scratch.rotate(_ann_anchors(emb))
-    scratch.keep()
+    anchors = _ann_anchors(emb).localCheckpoint(eager=True)
 
     # entry set: positions 0, n/3, 2n/3 of the a_id order (global
     # window over the dimension-sized anchor table)
@@ -875,22 +872,8 @@ def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str,
                f"AS BIGINT))"))
            .select("a_id"))
 
-    def knn_edges(degree: int) -> DataFrame:
-        ay = anchors.select(F.col("a_id").alias("b_id"),
-                            F.col("a_emb").alias("b_emb"))
-        w_e = Window.partitionBy("a_id").orderBy(F.desc("a_cos"),
-                                                 F.asc("b_id"))
-        return (anchors.crossJoin(F.broadcast(ay))
-                .filter(F.col("a_id") != F.col("b_id"))
-                .select("a_id", "b_id",
-                        cosine_similarity("a_emb", "b_emb")
-                        .alias("a_cos"))
-                .withColumn("rnk", F.row_number().over(w_e))
-                .filter(F.col("rnk") <= degree)
-                .select("a_id", "b_id"))
-
-    redges = knn_edges(_GR_RDEG)
-    pedges = knn_edges(_AG_DEGREE)
+    redges = _knn_edges(anchors, _GR_RDEG)
+    pedges = _knn_edges(anchors, _AG_DEGREE)
 
     # routing candidate table: stay + routing edges — SKINNY
     # (cur, cand_id) pairs only as of r12; candidate embeddings
@@ -898,21 +881,20 @@ def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str,
     # state ever carries a float vector. Materialized once as part of
     # the INDEX — without the checkpoint each hop's plan re-ran the
     # adjacency window (the single-hop form's 8-scan lesson)
-    rcand = scratch.rotate(
+    rcand = (
         anchors.select(F.col("a_id").alias("cur"),
                        F.col("a_id").alias("cand_id"))
         .unionByName(
             redges.select(F.col("a_id").alias("cur"),
-                          F.col("b_id").alias("cand_id"))))
-    scratch.keep()
+                          F.col("b_id").alias("cand_id")))
+        .localCheckpoint(eager=True))
 
     # query batch: |queries| rows, materialized once (every hop and
     # the final re-rank read it)
-    q = scratch.rotate(
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("q_emb")))
-    scratch.keep()
+    q = (emb.filter(F.col("vec_id") < N_QUERIES)
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("q_emb"))
+         .localCheckpoint(eager=True))
     frontier = q.crossJoin(F.broadcast(ent)).select(
         "query_id", F.col("a_id").alias("anchor"))
     visited = [frontier]
@@ -985,10 +967,8 @@ def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str,
     # never leaves its scan
     assigned = _anchor_argmax_assign(emb, anchors).select(
         F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"), "a_id")
-    index = CheckpointRotator(spark)
-    assigned = index.rotate(assigned)
-    index.keep()
+        F.col("embedding").alias("c_emb"), "a_id"
+    ).localCheckpoint(eager=True)
 
     cells = (final.select("query_id", F.col("anchor").alias("cell"))
              .unionByName(

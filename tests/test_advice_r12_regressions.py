@@ -169,13 +169,8 @@ def test_sharded_clusters_within_shard_groups(spark):
     ]
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, source string, shard long")
-    pairs = ngram_jaccard_pairs(
-        docs, 0.8, shard_cols=("source", "shard")
-    ).select("id_a", "id_b")
-    edges = pairs.unionByName(
-        pairs.select(F.col("id_b").alias("id_a"),
-                     F.col("id_a").alias("id_b")))
-    labels = component_labels(edges)
+    labels = component_labels(spark, lambda: ngram_jaccard_pairs(
+        docs, 0.8, shard_cols=("source", "shard")))
     shard_of = docs.select(F.col("doc_id").alias("node"),
                            "source", "shard")
     got_df = (labels.join(shard_of, "node")

@@ -10,12 +10,14 @@ asserted directly on ``getPersistentRDDs`` counts.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+import pytest
 
 from mapreducewordcounting_spark.checkpoints import (
     CheckpointRotator,
     n_pinned,
     release_all_pinned,
 )
+from mapreducewordcounting_spark.registry import queries
 
 
 def test_rotator_unpersists_superseded_steps(spark):
@@ -50,12 +52,16 @@ def test_pagerank_loop_pins_only_final_snapshot(spark, sf_dir):
     assert n_pinned(spark) == base
 
 
-def test_dedup_clusters_loop_pins_only_final_snapshot(spark, sf_dir):
-    from mapreducewordcounting_spark.operators.dedup import dedup_clusters
-
+@pytest.mark.parametrize("name", [
+    "dedup_clusters", "dedup_clusters_sharded", "dedup_semantic_clusters",
+    "graph_wcc_trade"])
+def test_dedup_clusters_loop_pins_only_final_snapshot(spark, sf_dir, name):
+    """Every component_labels caller: the pair sub-plan's checkpoints,
+    the edge list and the superseded label snapshots are all released;
+    at most the final label snapshot stays pinned."""
     release_all_pinned(spark)
     base = n_pinned(spark)
-    df = dedup_clusters(spark, sf_dir)
+    df = queries()[name](spark, sf_dir)
     assert n_pinned(spark) - base <= 1
     assert df.count() >= 0  # surviving snapshot readable end-to-end
     release_all_pinned(spark)

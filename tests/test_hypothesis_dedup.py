@@ -214,12 +214,12 @@ _edges = st.lists(
 @given(edges=_edges)
 def test_component_labels_match_union_find(spark, edges):
     """component_labels (the min-label loop shared by dedup_clusters,
-    dedup_semantic_clusters, and sample_split_leakage_safe) must equal
-    a plain union-find on arbitrary small graphs — including chains
-    whose min-label eccentricity forces multiple convergence sweeps,
-    the regime the fixture's tiny clusters never reach."""
-    from pyspark.sql import functions as F
-
+    dedup_clusters_sharded, dedup_semantic_clusters, graph_wcc_trade
+    and sample_split_leakage_safe) must equal a plain union-find on
+    arbitrary small graphs — including chains whose min-label
+    eccentricity forces multiple convergence sweeps, the regime the
+    fixture's tiny clusters never reach. Pairs go in one direction
+    only: component_labels symmetrizes them itself."""
     from mapreducewordcounting_spark.operators.dedup import (
         component_labels,
     )
@@ -240,13 +240,10 @@ def test_component_labels_match_union_find(spark, edges):
     nodes = {n for e in edges for n in e}
     expected = sorted((n, find(n)) for n in nodes)
 
-    df = spark.createDataFrame(
-        [(a, b) for a, b in edges] + [(b, a) for a, b in edges],
-        "id_a long, id_b long")
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
     got = sorted(
         (r.node, r.label)
-        for r in component_labels(
-            df.localCheckpoint(eager=True)).collect())
+        for r in component_labels(spark, lambda: df).collect())
     assert got == expected
 
 
